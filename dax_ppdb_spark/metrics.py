@@ -1,12 +1,14 @@
 """Per-stage instrumentation: the Timer / MonAgent / log_job analog.
 
 Reference: operation timers tagged per table/chunk with row counts
-(``sql/_ppdb_sql.py:197-251``, ``sql/bulk_insert.py:80-85``), per-job
-bytes/slot-ms logging (``bigquery/query_runner.py:63-100``), and DML
+(``sql/_ppdb_sql.py:197-251``, ``sql/bulk_insert.py:80-85``) and DML
 row-count reporting (``bigquery/updates/updates_manager.py:242-271``).
 
 Spark equivalent: wall-clock timers around driver-side stage
-boundaries plus the metrics Spark itself exposes; emitted through
+boundaries, plus DML counts computed by Spark ``Observation``s inside
+the very job that writes the rows — nothing here re-runs or walks an
+executed plan.  Per-job cost (bytes, tasks, CPU) belongs to Spark's own
+event log, reduced outside the program.  Entries are emitted through
 standard logging so deployments route them like any other telemetry.
 """
 
@@ -76,71 +78,6 @@ def flush_observations() -> list[dict]:
         _LOG.info("%s dml %s", stage, tag_s)
         out.append(dict(entry))
     return out
-
-
-def plan_metrics(df) -> dict:
-    """Scan/shuffle/output stats from an already-executed plan — the
-    bytes-processed / rows-affected numbers the reference logs per job
-    (``query_runner.py:63-100``).  Spark accumulates SQLMetrics on the
-    physical plan during execution; this walks the final adaptive plan
-    (hopping into materialized query stages) and totals the ones that
-    describe job cost.  Call only after an action on ``df``.
-    """
-    root = df._jdf.queryExecution().executedPlan()
-    totals = {
-        "bytes_scanned": 0,
-        "files_read": 0,
-        "rows_scanned": 0,
-        "shuffle_bytes_written": 0,
-        "output_rows": None,
-    }
-
-    def node_metrics(n) -> dict:
-        out = {}
-        it = n.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            out[kv._1()] = kv._2().value()
-        return out
-
-    def children(n):
-        out = [n.children().apply(i) for i in range(n.children().size())]
-        if not out:
-            # AdaptiveSparkPlanExec / QueryStageExec hide their subtree
-            for meth in ("finalPhysicalPlan", "plan"):
-                try:
-                    out.append(getattr(n, meth)())
-                    break
-                except Exception:
-                    continue
-        return out
-
-    def visit(n):
-        name = n.nodeName()
-        m = node_metrics(n)
-        if name.startswith("Scan"):
-            totals["bytes_scanned"] += int(m.get("filesSize", 0))
-            totals["files_read"] += int(m.get("numFiles", 0))
-            totals["rows_scanned"] += int(m.get("numOutputRows", 0))
-        elif name == "Exchange":
-            totals["shuffle_bytes_written"] += int(m.get("shuffleBytesWritten", 0))
-        if totals["output_rows"] is None and "numOutputRows" in m:
-            totals["output_rows"] = int(m["numOutputRows"])
-        for c in children(n):
-            visit(c)
-
-    visit(root)
-    return totals
-
-
-def log_plan_metrics(df, stage: str, **tags) -> dict:
-    """Log :func:`plan_metrics` as a ``kind="job"`` entry."""
-    vals = plan_metrics(df)
-    entry = {"kind": "job", "stage": stage, **vals, **tags}
-    _RECENT.append(entry)
-    tag_s = " ".join(f"{k}={v}" for k, v in {**vals, **tags}.items())
-    _LOG.info("%s job %s", stage, tag_s)
-    return dict(entry)
 
 
 def drop_pending() -> int:

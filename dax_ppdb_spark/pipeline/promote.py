@@ -19,6 +19,14 @@ ordered steps with cleanup in ``finally``:
 Ordering invariant (SURVEY §3.3): updates apply after inserts within a
 batch; last-writer-wins resolves by (chunk, time_ns, order) DESC.
 
+Each batch fact is derived once.  :meth:`Promoter._staged` is the only
+reader of the staging tables (updates included); ``promote()`` calls it
+once per table, expands + latest-dedups + checkpoints the staged
+updates once, derives the touched DiaObject ids from those two, and
+hands the resulting :class:`Batch` to every step.  A staging table with
+no partition for the batch reads as ``None``; any other read error
+(a corrupt staged file, say) propagates, so the chunk stays STAGED.
+
 Scale notes — every step is O(batch), never O(table):
 
 - staging tables are partitioned by ``apdb_replica_chunk`` so step 1
@@ -52,13 +60,15 @@ from __future__ import annotations
 
 import logging
 import os
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..io.table import ParquetTable
 from ..ledger import Ledger
-from ..metrics import flush_observations, log_plan_metrics, timer
+from ..metrics import flush_observations, timer
 from ..ops.merge import merge_patch
 from ..ops.spatial import with_geo_point
 from ..ops.updates import TABLE_PATCHES, expand_updates, latest_updates, table_patch
@@ -68,6 +78,9 @@ from ..schema.registry import CHUNK_COLUMN, ChunkStatus, validity_columns
 _LOG = logging.getLogger("dax_ppdb_spark.promote")
 
 DIA_TABLES = ("DiaObject", "DiaSource", "DiaForcedSource")
+# Staging holds the three Dia tables plus the update records.
+UPDATES = "updates"
+STAGED_TABLES = (*DIA_TABLES, UPDATES)
 
 # Internal/promotion tables are RANGE-bucketed on the column their
 # point-MERGEs key on — the analog of the reference's BigQuery
@@ -81,6 +94,9 @@ DIA_TABLES = ("DiaObject", "DiaSource", "DiaForcedSource")
 # DiaSource updates key on diaSourceId (reassign/withdraw), the other
 # two tables on diaObjectId.
 OBJ_BUCKET = "obj_bucket"
+# Ids per bucket: sized so one bucket's rows are a comfortable rewrite
+# unit (a few GB at production row sizes).
+BUCKET_WIDTH = 1_000_000
 BUCKET_KEYS = {
     "DiaObject": "diaObjectId",
     "DiaSource": "diaSourceId",
@@ -88,13 +104,26 @@ BUCKET_KEYS = {
 }
 
 
+@dataclass(frozen=True)
+class Batch:
+    """One ``promote()`` call's inputs, each derived once.
+
+    ``staged`` maps every :data:`STAGED_TABLES` name to its staged
+    slice of the batch (``None``: nothing staged); ``latest`` is the
+    expanded, latest-only, checkpointed update set (``None``: the batch
+    carries no updates); ``touched_ids`` holds the DiaObject ids the
+    batch inserts or patches (``None``: neither)."""
+
+    staged: dict[str, DataFrame | None]
+    latest: DataFrame | None
+    touched_ids: DataFrame | None
+
+
 class Promoter:
     def __init__(
         self,
         spark: SparkSession,
         root: str,
-        bucket_width: int = 1_000_000,
-        delta_export: bool = False,
         constraints: dict | None = None,
     ) -> None:
         self.spark = spark
@@ -109,17 +138,8 @@ class Promoter:
         self.constraints = constraints or {}
         # DML stats of the most recent promote() (reset per call).
         self.last_dml: list[dict] = []
-        # Ids per bucket: size so one bucket's rows are a comfortable
-        # rewrite unit (a few GB at production row sizes).
-        self.bucket_width = bucket_width
-        # Publish a Delta-protocol _delta_log over the public snapshot
-        # after every promotion, so external engines can query it (the
-        # reference's public dataset is externally queryable;
-        # io/delta_export.py).  Off by default: pure metadata, but one
-        # extra schema-read job per promotion.
-        self.delta_export = delta_export
         self.staging = {t: ParquetTable(os.path.join(root, "staging", t)) for t in DIA_TABLES}
-        self.staging_updates = ParquetTable(os.path.join(root, "staging", "updates"))
+        self.staging_updates = ParquetTable(os.path.join(root, "staging", UPDATES))
         self.internal = {t: ParquetTable(os.path.join(root, "internal", t)) for t in DIA_TABLES}
         self.promotion = {t: ParquetTable(os.path.join(root, "promotion", t)) for t in DIA_TABLES}
         self.public_diaobject = ParquetTable(os.path.join(root, "public", "DiaObject"))
@@ -127,8 +147,9 @@ class Promoter:
 
     # -- bucketing ----------------------------------------------------------
 
-    def _bucket_expr(self, key: Column) -> Column:
-        return F.floor(key / F.lit(self.bucket_width)).cast("long")
+    @staticmethod
+    def _bucket_expr(key: Column) -> Column:
+        return F.floor(key / F.lit(BUCKET_WIDTH)).cast("long")
 
     def _with_bucket(self, df: DataFrame, table: str) -> DataFrame:
         return df.withColumn(OBJ_BUCKET, self._bucket_expr(F.col(BUCKET_KEYS[table])))
@@ -189,36 +210,54 @@ class Promoter:
         )
 
     def _staged(self, table: str, chunk_ids: list[int]) -> DataFrame | None:
-        t = self.staging[table]
-        if not t.exists():
+        """The only reader of the staging tables: ``table``'s rows for
+        ``chunk_ids`` (chunk-partition-pruned), or ``None`` when the
+        table holds no partition directory for any of them — never
+        written, or dropped by an earlier promotion.  Any read error
+        propagates."""
+        t = self.staging_updates if table == UPDATES else self.staging[table]
+        d = t.data_dir()
+        if d is None or not any(
+            os.path.isdir(os.path.join(d, f"{CHUNK_COLUMN}={c}")) for c in chunk_ids
+        ):
             return None
-        try:
-            df = t.read(self.spark)
-        except Exception:
-            # All partitions dropped -> empty directory, nothing staged.
-            return None
-        return df.filter(F.col(CHUNK_COLUMN).isin(chunk_ids))
+        return t.read(self.spark).filter(F.col(CHUNK_COLUMN).isin(chunk_ids))
 
-    def _validate_constraints(self, chunk_ids: list[int]) -> None:
+    def _validate_constraints(
+        self, staged: dict[str, DataFrame | None], chunk_ids: list[int]
+    ) -> None:
         """Audit each configured table's STAGED slice of this batch;
         raise ``ConstraintViolationError`` on the first failing table.
-        The audit collect is O(rules); the scanned data is O(batch)
-        (chunk-partition-pruned via ``_staged``)."""
+        The audit collect is O(rules); the scanned data is O(batch)."""
         from ..ops.constraints import enforce_constraints
 
         for table, rules in self.constraints.items():
-            if table == "updates":
-                t = self.staging_updates
-                df = (
-                    t.read(self.spark).filter(F.col(CHUNK_COLUMN).isin(chunk_ids))
-                    if t.exists()
-                    else None
-                )
-            else:
-                df = self._staged(table, chunk_ids)
-            if df is None:
-                continue
-            enforce_constraints(df, rules, f"staged {table} chunks={chunk_ids}")
+            df = staged[table]
+            if df is not None:
+                enforce_constraints(df, rules, f"staged {table} chunks={chunk_ids}")
+
+    def _batch(self, chunk_ids: list[int]) -> Batch:
+        """Read the batch's staging slices, gate them, and derive the
+        update set and touched ids — once per ``promote()``."""
+        staged = {t: self._staged(t, chunk_ids) for t in STAGED_TABLES}
+        if self.constraints:
+            # Validate BEFORE the first write: a failing batch aborts
+            # with staging + ledger untouched.
+            with timer("validate_constraints", chunks=chunk_ids):
+                self._validate_constraints(staged, chunk_ids)
+        raw = staged[UPDATES]
+        latest = (
+            latest_updates(expand_updates(raw)).localCheckpoint()
+            if raw is not None
+            else None
+        )
+        ids = []
+        if staged["DiaObject"] is not None:
+            ids.append(staged["DiaObject"].select("diaObjectId"))
+        if latest is not None:
+            ids.append(table_patch(latest, "DiaObject").select("diaObjectId"))
+        touched = reduce(DataFrame.unionByName, ids).distinct() if ids else None
+        return Batch(staged, latest, touched)
 
     # -- promotion ----------------------------------------------------------
 
@@ -235,12 +274,7 @@ class Promoter:
         # one-line summary lands in the promote log at the end.
         self.last_dml: list[dict] = []
         try:
-            if self.constraints:
-                # Validate BEFORE the first write: a failing batch
-                # aborts with staging + ledger untouched (nothing for
-                # _cleanup to roll back).
-                with timer("validate_constraints", chunks=chunk_ids):
-                    self._validate_constraints(chunk_ids)
+            batch = self._batch(chunk_ids)
             steps = (
                 ("copy_staging_to_promotion", self._copy_staging_to_promotion),
                 ("fill_validity_end", self._fill_validity_end),
@@ -248,15 +282,11 @@ class Promoter:
             )
             for name, step in steps:
                 with timer(name, chunks=chunk_ids):
-                    step(chunk_ids)
+                    step(batch)
             with timer("swap_promotion_to_internal", chunks=chunk_ids):
                 self._swap_promotion_to_internal()
             with timer("create_public_snapshot", chunks=chunk_ids):
-                self._update_public_snapshot(chunk_ids)
-            if self.delta_export and self.public_diaobject.exists():
-                from ..io.delta_export import export_delta_log
-
-                export_delta_log(self.public_diaobject, self.spark)
+                self._update_public_snapshot(batch)
             with timer("delete_staged", chunks=chunk_ids):
                 self._delete_staged(chunk_ids)
             # One ledger commit for the whole batch (k event rows), not
@@ -278,16 +308,16 @@ class Promoter:
         finally:
             self._cleanup()
 
-    @staticmethod
-    def _concurrent(thunks) -> None:
+    def _concurrent(self, thunks) -> None:
         """Run independent per-table Spark thunks concurrently.
 
         Spark job submission is thread-safe; each thread names its own
         scheduler pool so a FAIR-mode cluster interleaves the jobs
         (FIFO ignores the property — the threads still overlap wherever
-        task slots are free).  The first failure propagates after all
-        threads finish, so a crashed table never leaves a sibling
-        mid-write."""
+        task slots are free) and carries the caller's job group, so
+        job-group status and cancellation cover the whole promotion.
+        The first failure propagates after all threads finish, so a
+        crashed table never leaves a sibling mid-write."""
         thunks = list(thunks)
         if len(thunks) <= 1:
             for t in thunks:
@@ -295,15 +325,21 @@ class Promoter:
             return
         from concurrent.futures import ThreadPoolExecutor
 
+        sc = self.spark.sparkContext
+        inherited = {
+            k: sc.getLocalProperty(k)
+            for k in (
+                "spark.jobGroup.id",
+                "spark.job.description",
+                "spark.job.interruptOnCancel",
+            )
+        }
+
         def pooled(i, t):
             def run():
-                from pyspark.sql import SparkSession
-
-                sess = SparkSession.getActiveSession()
-                if sess is not None:
-                    sess.sparkContext.setLocalProperty(
-                        "spark.scheduler.pool", f"promote-{i}"
-                    )
+                props = {**inherited, "spark.scheduler.pool": f"promote-{i}"}
+                for k, v in props.items():
+                    sc.setLocalProperty(k, v)
                 t()
 
             return run
@@ -315,7 +351,7 @@ class Promoter:
             if e is not None:
                 raise e
 
-    def _copy_staging_to_promotion(self, chunk_ids: list[int]) -> None:
+    def _copy_staging_to_promotion(self, batch: Batch) -> None:
         """Step 1: promo := zero-copy clone(internal) + append of the
         staged rows only, with geo_point and bucket computed.
 
@@ -325,11 +361,10 @@ class Promoter:
         The three tables' copies are independent jobs, submitted
         concurrently (:meth:`_concurrent`)."""
         self._concurrent(
-            (lambda t=t: self._copy_one_table(t, chunk_ids)) for t in DIA_TABLES
+            (lambda t=t: self._copy_one_table(t, batch.staged[t])) for t in DIA_TABLES
         )
 
-    def _copy_one_table(self, t: str, chunk_ids: list[int]) -> None:
-        staged = self._staged(t, chunk_ids)
+    def _copy_one_table(self, t: str, staged: DataFrame | None) -> None:
         add = (
             self._with_bucket(with_geo_point(staged.drop(CHUNK_COLUMN)), t)
             if staged is not None
@@ -357,7 +392,7 @@ class Promoter:
                 self._id_sorted(add, t), partition_by=(OBJ_BUCKET,)
             )
 
-    def _fill_validity_end(self, chunk_ids: list[int]) -> None:
+    def _fill_validity_end(self, batch: Batch) -> None:
         """Step 2: close open DiaObject intervals — touched buckets only.
 
         The staged id set names a handful of id-range buckets; only
@@ -366,7 +401,7 @@ class Promoter:
         the reference MERGE's touched-rows-only IO
         (``fill_diaobject_validity_end.sql:25-40``).
         """
-        staged = self._staged("DiaObject", chunk_ids)
+        staged = batch.staged["DiaObject"]
         if staged is None or not self.promotion["DiaObject"].exists():
             return
         ids = staged.select("diaObjectId").distinct()
@@ -386,20 +421,16 @@ class Promoter:
         )
         self.last_dml.extend(flush_observations())
 
-    def _apply_updates(self, chunk_ids: list[int]) -> None:
-        """Step 3: expand -> latest-only -> per-table bucket-pruned merge.
+    def _apply_updates(self, batch: Batch) -> None:
+        """Step 3: per-table bucket-pruned merge of the batch's
+        latest-only updates (expanded once, in :meth:`_batch`).
 
         Each table's patch keys map to a handful of id-range buckets; the
         MERGE reads and rewrites only those partitions.
         """
-        if not self.staging_updates.exists():
+        latest = batch.latest
+        if latest is None:
             return
-        raw = self.staging_updates.read(self.spark).filter(
-            F.col(CHUNK_COLUMN).isin(chunk_ids)
-        )
-        if not raw.limit(1).count():
-            return
-        latest = latest_updates(expand_updates(raw)).localCheckpoint()
         # The per-table merges are independent (distinct promotion
         # tables, patch slices of the shared checkpointed `latest`) —
         # submit them concurrently; observations resolve after the pool
@@ -415,9 +446,9 @@ class Promoter:
         if not self.promotion[t].exists():
             return
         patch = table_patch(latest, t)
-        if not patch.limit(1).count():
-            return
         buckets = self._buckets_of(patch, key_cols[0])
+        if not buckets:
+            return
         target = self.promotion[t].read(self.spark)
         touched = target.filter(F.col(OBJ_BUCKET).isin(buckets))
         # observe_as rides the write job below: per-MERGE scanned/
@@ -436,7 +467,7 @@ class Promoter:
 
     GEO_LEVEL = 4  # coarse cell for partitioning: at most 256 directories
 
-    def _update_public_snapshot(self, chunk_ids: list[int]) -> None:
+    def _update_public_snapshot(self, batch: Batch) -> None:
         """Step 5: public DiaObject = current rows only, without
         validityEndMjdTai, clustered by geo_point (D10/P3/P4).
 
@@ -461,10 +492,8 @@ class Promoter:
         if not self.public_diaobject.exists():
             self._create_public_snapshot_full()
             return
-        touched = self._touched_object_ids(chunk_ids)
-        if touched is None:
-            return
-        self._update_public_snapshot_incremental(touched)
+        if batch.touched_ids is not None:
+            self._update_public_snapshot_incremental(batch.touched_ids)
 
     def _create_public_snapshot_full(self) -> None:
         from ..ops.spatial import zorder_cell
@@ -480,26 +509,6 @@ class Promoter:
             "geo_point"
         )
         self.public_diaobject.overwrite(clustered, partition_by=("geo_cell",))
-
-    def _touched_object_ids(self, chunk_ids: list[int]) -> DataFrame | None:
-        """DiaObject ids this batch inserted or patched (batch-sized)."""
-        parts = []
-        staged = self._staged("DiaObject", chunk_ids)
-        if staged is not None:
-            parts.append(staged.select("diaObjectId"))
-        if self.staging_updates.exists():
-            raw = self.staging_updates.read(self.spark).filter(
-                F.col(CHUNK_COLUMN).isin(chunk_ids)
-            )
-            if raw.limit(1).count():
-                patch = table_patch(latest_updates(expand_updates(raw)), "DiaObject")
-                parts.append(patch.select("diaObjectId"))
-        if not parts:
-            return None
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out.distinct()
 
     def _update_public_snapshot_incremental(self, touched_ids: DataFrame) -> None:
         """Rewrite only the geo cells touched objects can occupy.
@@ -544,9 +553,6 @@ class Promoter:
             .sortWithinPartitions("geo_point")
         )
         self.public_diaobject.replace_partitions(replacement, "geo_cell", cells)
-        # bytes/rows actually touched by the incremental rewrite — the
-        # per-job cost line the reference logs (query_runner.py:63-100)
-        log_plan_metrics(replacement, "public_snapshot", cells=len(cells))
 
     def _delete_staged(self, chunk_ids: list[int]) -> None:
         """Step 6: partition drops on staging tables (D11)."""
